@@ -43,6 +43,7 @@ influence partition counts.
 
 from __future__ import annotations
 
+import itertools
 import math
 from collections.abc import Callable, Iterable
 from typing import Any
@@ -119,6 +120,56 @@ def _run(
     )
 
 
+_MAX_PARTITIONS = 10_000
+_BUFFER_ROWS = 100_000
+
+
+def _input_rdd(sc, data_list: Iterable, num_mappers: int, max_chunk_size: int, dataset_size: int | None):
+    """``MapReduceBulk``'s input as an RDD of
+    ``max(min(ceil(n / chunk_size), 10_000), num_mappers, 1)`` partitions,
+    where ``chunk_size = min(max_chunk_size, ceil(n / num_mappers))``
+    (reference mapreduce.py:148-150) and ``n`` is ``dataset_size`` or the
+    input length. List and unsized inputs get the same partition count
+    and the same element order.
+    """
+    floor = max(int(num_mappers), 1)
+    cap = max(_MAX_PARTITIONS, floor)
+    sized = isinstance(data_list, (list, tuple, range))
+    n = dataset_size if dataset_size is not None else len(data_list) if sized else None
+    chunk_size = max(max_chunk_size if n is None else min(max_chunk_size, math.ceil(n / floor)), 1)
+    if sized:
+        # ``range`` stays unconverted: parallelize ships only
+        # (start, stop, step) per partition and generates the elements
+        # executor-side, instead of pickling each one through the driver.
+        return sc.parallelize(data_list, min(max(math.ceil(len(data_list) / chunk_size), floor), cap))
+    # Unsized iterables stream in buffers of whole chunks, one
+    # parallelize call each, so the Python driver holds one buffer, not
+    # the whole input. The serialized buffers still pile up in the JVM
+    # driver until the job runs, as the list path's single call does.
+    # Buffers hold >= 100k rows so a small max_chunk_size cannot turn
+    # into thousands of py4j calls. With n unknown, a chunk_size above
+    # n / num_mappers only matters through the num_mappers floor, which
+    # the last buffer (detected by a one-element look-ahead) makes up.
+    buf_rows = chunk_size * math.ceil(_BUFFER_ROWS / chunk_size)
+    it = iter(data_list)
+    rdds, total = [], 0
+    buf = list(itertools.islice(it, buf_rows))
+    while buf:
+        ahead = list(itertools.islice(it, 1))
+        slices = math.ceil(len(buf) / chunk_size)
+        if not ahead:
+            slices = max(slices, floor - total)
+        slices = max(min(slices, cap - total), 1)
+        rdds.append(sc.parallelize(buf, slices))
+        total += slices
+        buf = ahead + list(itertools.islice(it, buf_rows - 1))
+    if not rdds:
+        return sc.parallelize([], floor)
+    rdd = rdds[0] if len(rdds) == 1 else sc.union(rdds)  # union keeps buffer order
+    # Past the cap every further buffer added one partition; merge them back.
+    return rdd.coalesce(cap) if total > cap else rdd
+
+
 def MapReduceBulk(
     data_list: Iterable,
     map_fcn: MapFcn,
@@ -144,61 +195,7 @@ def MapReduceBulk(
     (see ``_run``); omit it for reference-exact holistic reduces.
     """
     spark = spark or get_spark()
-    # Keep ``range`` inputs unconverted: SparkContext.parallelize has a
-    # dedicated range fast path ("Using range is recommended if the
-    # input represents a range for performance" — pyspark docs) that
-    # ships only (start, stop, step) per partition and generates the
-    # elements executor-side, instead of pickling every element
-    # through the driver and a temp file (guide §4: move fewer bytes
-    # across the Python boundary). Same elements, same order — the
-    # reference's 2M-record job drops its driver-side serialization
-    # entirely. list/tuple inputs are unchanged.
-    if isinstance(data_list, (list, tuple, range)):
-        data = data_list
-        n = dataset_size if dataset_size is not None else len(data)
-        chunk_size = min(max_chunk_size, math.ceil(n / max(num_mappers, 1))) or 1
-        num_parts = max(
-            min(math.ceil(len(data) / chunk_size), 10_000), int(num_mappers), 1
-        )
-        rdd = spark.sparkContext.parallelize(data, num_parts)
-    else:
-        # Lazy/unsized iterables: STREAM driver-side in bounded buffers
-        # instead of materializing one full list (r16, guide §4/§5 —
-        # the driver should hold O(buffer), not O(n)). Each buffer
-        # becomes one parallelize call sliced into
-        # ceil(len/chunk_size) partitions, so the total partition
-        # count matches the list path's arithmetic; union preserves
-        # buffer order, so element order matches the list path exactly
-        # (equivalence test: test_bulk_generator_input_matches_list).
-        # The buffer is >= chunk_size so a small reference-default
-        # max_chunk_size (1000) cannot degenerate into thousands of
-        # per-chunk py4j parallelize calls. The shuffle/reduce stages
-        # are unchanged.
-        import itertools
-
-        if dataset_size is not None:
-            chunk_size = (
-                min(max_chunk_size, math.ceil(dataset_size / max(num_mappers, 1))) or 1
-            )
-        else:
-            chunk_size = max(int(max_chunk_size), 1)
-        buf_rows = max(chunk_size, 100_000)
-        sc = spark.sparkContext
-        it = iter(data_list)
-        rdds = []
-        while True:
-            chunk = list(itertools.islice(it, buf_rows))
-            if not chunk:
-                break
-            rdds.append(
-                sc.parallelize(chunk, max(1, math.ceil(len(chunk) / chunk_size)))
-            )
-        if not rdds:
-            rdd = sc.parallelize([], max(int(num_mappers), 1))
-        elif len(rdds) == 1:
-            rdd = rdds[0]
-        else:
-            rdd = sc.union(rdds)
+    rdd = _input_rdd(spark.sparkContext, data_list, num_mappers, max_chunk_size, dataset_size)
     return _run(rdd, map_fcn, reduce_fcn, num_reducers, strict_keys, combiner)
 
 

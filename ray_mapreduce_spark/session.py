@@ -23,6 +23,14 @@ an explicit override documented below):
   style dims broadcast automatically; query code adds explicit
   ``broadcast()`` hints where the dim is known-small regardless of
   stats (e.g. derived query-vector sets).
+- ``spark.python.daemon.module`` = ``ray_mapreduce_spark._daemon``:
+  every Python task calls ``importlib.invalidate_caches()``, which on
+  Python < 3.13 re-reads each zip archive on the workers' path
+  (``pyspark.zip``, the py4j zip, the spark-core JAR; ~16 importers).
+  That cost 150-300 ms per task on 4 cores; the daemon re-reads only a
+  changed archive, which takes ~0.1 ms per task. On 3.13+ it runs the
+  stock daemon. The package root joins the workers' ``PYTHONPATH`` so
+  the module imports from any working directory (local master only).
 """
 
 from __future__ import annotations
@@ -32,6 +40,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -41,6 +51,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession with engine defaults."""
     cpus = cpus or DEFAULT_CPUS
+    extra_conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(filter(None, [_PACKAGE_ROOT, extra_conf.pop(_WORKER_PATH, "")]))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -53,7 +65,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "ray_mapreduce_spark._daemon")
+        .config(_WORKER_PATH, worker_path)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

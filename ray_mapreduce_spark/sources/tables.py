@@ -32,20 +32,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Per-process cache of INFERRED SCHEMAS (StructType metadata only —
 # never rows, never plans; every action still scans the parquet files).
 # spark.read.parquet() runs driver-side schema inference (a footer
-# read + file listing) on EVERY call — measured 70–107 ms per call on
-# this box, which was nearly the entire plan-build time of the
-# multi-table TPC-H builders (6 tables ≈ 0.45 s of q5's 0.5 s build;
-# r16, guide §1/§5 — at an overhead-bound bench SF, driver latency IS
-# the query time). First read of a (sf_dir, table) infers and caches;
-# later reads pass the schema explicitly (measured ~19 ms/call).
-# Data is immutable within a process lifetime (testdata regeneration
-# happens between driver rounds), so the cache cannot go stale.
+# read + file listing) on EVERY call — measured 70–107 ms per call,
+# nearly the entire plan-build time of the multi-table TPC-H builders
+# (6 tables ≈ 0.45 s of q5's 0.5 s build). Later reads pass the cached
+# schema explicitly (~19 ms/call). The key carries the file's
+# (st_mtime_ns, st_size), so a rewritten file is inferred again.
 _SCHEMA_CACHE: dict = {}
 
 
 def _read_parquet(spark: SparkSession, sf_dir: str, filename: str) -> DataFrame:
     path = os.path.join(sf_dir, filename)
-    key = (os.path.abspath(path),)
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local file (e.g. a cluster URI): infer every time
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)

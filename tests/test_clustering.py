@@ -176,3 +176,15 @@ def test_cluster_survivors_all_singletons(spark):
     rows = {r["doc_id"]: r for r in dedup_cluster_survivors(docs, pairs).collect()}
     assert len(rows) == 3
     assert all(r["is_survivor"] and r["cluster"] == k for k, r in rows.items())
+
+
+def test_cluster_survivors_endpoint_missing_from_docs(spark):
+    """Pins what happens when the documented contract "pair endpoints
+    ⊆ docs.doc_id" is broken: the component is labelled by its min
+    node (1), which is not a doc, so its cluster keeps ZERO survivors.
+    No runtime check guards this (it would cost a Spark job on the
+    clean-corpus hot path); callers derive pairs from the same docs."""
+    docs = spark.createDataFrame([(2,), (3,), (7,)], "doc_id long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    rows = sorted(tuple(r) for r in dedup_cluster_survivors(docs, pairs).collect())
+    assert rows == [(2, 1, False), (3, 1, False), (7, 7, True)]

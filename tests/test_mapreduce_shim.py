@@ -337,12 +337,13 @@ def test_bulk_range_input_matches_list(spark):
     assert sorted(comb_range) == sorted(out_list)
 
 
-def test_bulk_generator_input_matches_list(spark):
-    """r16 optimization: lazy/unsized iterables stream driver-side in
-    chunks (one parallelize slice per chunk, union'd in order) instead
-    of materializing one full list — the driver holds O(chunk) not
-    O(n). Results must match the list path exactly, with and without
-    dataset_size, for both reduce paths, and for an empty generator."""
+def test_bulk_generator_input_matches_list(spark, monkeypatch):
+    """Lazy/unsized iterables stream driver-side in buffers (one
+    parallelize call per buffer, union'd in order) instead of
+    materializing one full list. Results must match the list path
+    exactly, with and without dataset_size, for both reduce paths, and
+    for an empty generator; so must the input partition count, under
+    the num_mappers floor and the 10,000-partition cap too."""
     vals = list(range(5, 997, 2))
     out_list = MapReduceBulk(vals, map_fcn, reduce_max, 3, 4, max_chunk_size=50, spark=spark)
     out_gen = MapReduceBulk(
@@ -360,3 +361,20 @@ def test_bulk_generator_input_matches_list(spark):
     )
     assert sorted(comb_gen) == sorted(out_list)
     assert MapReduceBulk(iter(()), map_fcn, reduce_max, 3, 4, spark=spark) == []
+
+    import ray_mapreduce_spark.mapreduce as mr
+
+    monkeypatch.setattr(mr, "_run", lambda rdd, *args: rdd.getNumPartitions())
+
+    def parts(data, mappers, chunk):
+        return MapReduceBulk(data, map_fcn, reduce_max, mappers, 4, max_chunk_size=chunk, spark=spark)
+
+    for n, mappers, chunk, expected in [
+        (30, 4, 1000, 4),  # n <= chunk: the num_mappers floor
+        (250_000, 3, 30_000, 9),  # three buffers of whole chunks
+        (250_000, 20, 100_000, 20),  # three buffers, the floor on the last
+        (20_000, 2, 1, 10_000),  # the cap within one buffer
+        (250_000, 2, 10, 10_000),  # the cap across buffers
+    ]:
+        assert parts(range(n), mappers, chunk) == expected
+        assert parts((x for x in range(n)), mappers, chunk) == expected, (n, mappers, chunk)

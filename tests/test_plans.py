@@ -202,6 +202,39 @@ def test_events_ts_guard_rejects_unknown_dtype(spark, tmp_path):
         load_table(spark, str(tmp_path), "events")
 
 
+def test_schema_cache_reinfers_rewritten_file(spark, tmp_path):
+    """The inferred-schema cache is keyed on the file's mtime and size:
+    rewriting events.parquet from TIMESTAMP(MICROS) to TIMESTAMP(NANOS)
+    (as testdata regeneration has done) must infer the schema again,
+    not apply the stale micros schema to the nanos file."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ray_mapreduce_spark.sources import load_table, tables
+
+    when = [datetime.datetime(2024, 1, 1, 12, 30, 15, 123456)]
+
+    def write(unit: str) -> None:
+        pq.write_table(
+            pa.table({"event_id": pa.array([1], pa.int64()), "ts": pa.array(when, pa.timestamp(unit))}),
+            str(tmp_path / "events.parquet"),
+        )
+
+    def read():
+        raw = dict(tables._read_parquet(spark, str(tmp_path), "events.parquet").dtypes)["ts"]
+        return raw, load_table(spark, str(tmp_path), "events").collect()[0]["ts"]
+
+    write("us")
+    micros = read()
+    write("ns")
+    nanos = read()
+    assert micros[0] in ("timestamp", "timestamp_ntz")
+    assert nanos[0] == "bigint"  # nanos read as long: a re-inferred schema
+    assert nanos[1] == micros[1]
+
+
 # ---------------------------------------------------------------------------
 # Executed-ADAPTIVE-plan shape (gotchas #9/#14, promoted from the r6
 # A/B measurements to regression tests): static explain always shows
