@@ -5,7 +5,7 @@ Drop-in signatures for the reference's three entry points
 Spark pipeline the whole reference engine reduces to
 (SURVEY.md §2a "whole-pipeline Spark equivalent"):
 
-    parallelize/read.text -> flatMap(map_fcn)
+    parallelize/textFile -> flatMap(map_fcn)
       -> groupByKey(num_reducers) -> map(reduce_fcn) -> collect
 
 Preserved semantic invariants (SURVEY.md §4.3):
@@ -38,7 +38,14 @@ is identical; intermediates spill to disk instead of living in actor
 memory (the reference's acknowledged scale ceiling, reference
 mapreduce.py:24-26,81-83); chunk scheduling is Spark's task
 scheduler, so ``max_chunk_size``/``distribute_work_fcn`` only
-influence partition counts.
+influence partition counts. Both file entry points read through one
+``sc.textFile`` call over literal paths, as the reference opens them
+(commas and glob metacharacters are part of a name). The header skip
+assumes one file, as the reference's does: a directory with
+``ignore_first_line`` raises ``ValueError``. Input Hadoop cannot split
+(.gz) is spread to ``num_mappers`` partitions before the map; splits
+beyond ``max(num_mappers, defaultParallelism)`` (many small files) are
+packed into that many tasks.
 """
 
 from __future__ import annotations
@@ -51,6 +58,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from .session import get_spark
+from .sources.text import read_index
 
 MapFcn = Callable[[Any], Iterable[tuple[Any, Any]]]
 ReduceFcn = Callable[[Any, list], Any]
@@ -83,17 +91,15 @@ def _run(
         mapped = rdd.flatMap(mapper)
     else:
         # Default path: hand the user generator straight to flatMap —
-        # the strict-keys wrapper added a second Python generator layer
-        # per record, measurable per-element overhead at millions of
-        # records (r15; guide §4 — per-row Python cost is the wall for
-        # opaque-UDF jobs). flatMap itself already evaluates
+        # the strict-keys wrapper adds a second Python generator layer
+        # per record, a measurable per-element cost at millions of
+        # records. flatMap itself already evaluates
         # chain.from_iterable(map(map_fcn, it)) in one tight loop.
-        # Error-locality tradeoff (ADVICE r15): without the wrapper's
-        # per-element (k, v) unpack, a map_fcn yielding malformed
-        # elements (e.g. 3-tuples) now errors inside shuffle
-        # serialization with a less friendly traceback instead of at
-        # the mapper — that traceback is a malformed-map-output bug,
-        # not a shuffle bug. Valid-input behavior is unchanged.
+        # Error-locality tradeoff: without the wrapper's per-element
+        # (k, v) unpack, a map_fcn yielding malformed elements (e.g.
+        # 3-tuples) errors inside shuffle serialization with a less
+        # friendly traceback instead of at the mapper — that traceback
+        # is a malformed-map-output bug, not a shuffle bug.
         mapped = rdd.flatMap(map_fcn)
     parts = max(int(num_reducers), 1)
     if combiner is not None:
@@ -199,6 +205,39 @@ def MapReduceBulk(
     return _run(rdd, map_fcn, reduce_fcn, num_reducers, strict_keys, combiner)
 
 
+# Escapes Hadoop's glob metacharacters, so a path matches only itself,
+# and writes textFile's path separator, the comma, as the group {\,}.
+_LITERAL = str.maketrans({**{c: "\\" + c for c in "\\{}[]*?"}, ",": "{\\,}"})
+
+
+def _text_rdd(sc, paths: list[str], num_mappers: int, ignore_first_line: bool = False):
+    """The lines of ``paths``, each a literal path, in ``num_mappers`` to
+    ``max(num_mappers, defaultParallelism)`` partitions.
+    ``ignore_first_line`` drops the first line of partition 0, which is
+    split 0 of ``paths[0]``: with one file, its header."""
+    floor = max(int(num_mappers), 1)
+    if not paths:
+        return sc.parallelize([], floor)
+    if ignore_first_line:
+        path = sc._jvm.org.apache.hadoop.fs.Path(paths[0])
+        if path.getFileSystem(sc._jsc.hadoopConfiguration()).isDirectory(path):
+            raise ValueError(f"ignore_first_line needs one file, not a directory: {paths[0]}")
+    rdd = sc.textFile(",".join(p.translate(_LITERAL) for p in paths), minPartitions=floor)
+    if ignore_first_line:
+        rdd = rdd.mapPartitionsWithIndex(lambda i, it: itertools.islice(it, int(i == 0), None))
+    # textFile meets minPartitions on splittable input, but makes at least
+    # one split per file: many small files are packed, without a shuffle,
+    # into as many tasks as run at once. A file it cannot split (.gz) is
+    # one partition, and input of fewer bytes than num_mappers has fewer
+    # splits: those are spread to num_mappers.
+    parts, most = rdd.getNumPartitions(), max(floor, sc.defaultParallelism)
+    if parts > most:
+        rdd = rdd.coalesce(most)
+    elif parts < floor:
+        rdd = rdd.repartition(floor)
+    return rdd
+
+
 def MapReduceWithOneFileInput(
     filename: str,
     map_fcn: MapFcn,
@@ -218,22 +257,16 @@ def MapReduceWithOneFileInput(
     executor-side and splittable. Lines arrive WITHOUT the trailing
     newline (Spark strips it; the reference keeps it — its test map
     fns ``int(data)`` tolerate both, reference
-    mapreduce_unittest.py:6-8). Header skip shares
-    ``sources.text.read_text_lines`` — exact per file even when the
-    file spans multiple input splits.
+    mapreduce_unittest.py:6-8). ``filename`` is one literal path (or
+    URI): glob metacharacters and commas are part of the name.
+    ``ignore_first_line`` drops the file's first line, exactly, however
+    many splits the file has; a directory with ``ignore_first_line``
+    raises ``ValueError``, since a directory has no single first line.
+    Input that cannot be split (.gz) is spread to ``num_mappers``
+    partitions. ``max_chunk_size`` is accepted for signature parity.
     """
     spark = spark or get_spark()
-    min_parts = max(int(num_mappers), 1)
-    if ignore_first_line:
-        from .sources.text import read_text_lines
-
-        rdd = read_text_lines(spark, filename, ignore_first_line=True).rdd.map(
-            lambda row: row[0]
-        )
-        if rdd.getNumPartitions() < min_parts:
-            rdd = rdd.repartition(min_parts)  # output order is unspecified (invariant 4)
-    else:
-        rdd = spark.sparkContext.textFile(filename, minPartitions=min_parts)
+    rdd = _text_rdd(spark.sparkContext, [filename], num_mappers, ignore_first_line)
     return _run(rdd, map_fcn, reduce_fcn, num_reducers, strict_keys, combiner)
 
 
@@ -251,16 +284,12 @@ def MapReduceWithMultipleFiles(
     an index file of one path per line; mappers read their own files.
     Spark reads the listed paths executor-side (data-local); only the
     tiny index transits the driver — same as the reference, minus the
-    filename round-robin (Spark schedules splits with locality).
-    Paths are passed as a LIST to ``spark.read.text`` (never joined
-    with a delimiter), so paths containing commas or glob
-    metacharacters read correctly, matching the reference's
-    arbitrary-path handling."""
+    filename round-robin (Spark schedules splits with locality). Each
+    listed path is literal, as the reference opens it: commas and glob
+    metacharacters are part of the name. Input that cannot be split
+    (.gz) is spread to ``num_mappers`` partitions, and many small files
+    are packed into ``max(num_mappers, defaultParallelism)`` tasks; an
+    empty index returns ``[]``."""
     spark = spark or get_spark()
-    with open(index_filename) as fh:
-        paths = [line.strip() for line in fh if line.strip()]
-    min_parts = max(int(num_mappers), 1)
-    rdd = spark.read.text(paths).rdd.map(lambda row: row[0])
-    if rdd.getNumPartitions() < min_parts:
-        rdd = rdd.repartition(min_parts)  # output order is unspecified (invariant 4)
+    rdd = _text_rdd(spark.sparkContext, read_index(index_filename), num_mappers)
     return _run(rdd, map_fcn, reduce_fcn, num_reducers, strict_keys, combiner)

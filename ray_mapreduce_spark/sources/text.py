@@ -124,14 +124,21 @@ def read_csv_with_rejects(
     return good, rejects
 
 
-def read_manifest(spark: SparkSession, index_path: str) -> DataFrame:
-    """Reference ``MapReduceWithMultipleFiles`` source (reference
-    mapreduce.py:176-187): an index file lists one path per line; read
-    all listed files. The driver reads only the (tiny) index; record
-    bytes stay executor-side."""
+def read_index(index_path: str) -> list[str]:
+    """The paths an index file lists, one per line (reference
+    mapreduce.py:184-185), stripped of surrounding whitespace; blank
+    lines are skipped."""
     with open(index_path) as fh:
-        paths = [line.strip() for line in fh if line.strip()]
-    return spark.read.text(paths)
+        return [p for p in (line.strip() for line in fh) if p]
+
+
+def read_manifest(spark: SparkSession, index_path: str) -> DataFrame:
+    """The files an index lists (reference mapreduce.py:176-187), as one
+    DataFrame: the native form of ``MapReduceWithMultipleFiles``. Unlike
+    the shim, each listed path is a DataFrame-reader path, so glob
+    metacharacters expand (``c[1].txt`` reads ``c1.txt``). The driver
+    reads only the (tiny) index; record bytes stay executor-side."""
+    return spark.read.text(read_index(index_path))
 
 
 def read_jsonl(

@@ -99,22 +99,71 @@ def test_file_without_header(spark, int_files):
 
 # --- multi-file manifest ---------------------------------------------------
 
-def test_multiple_files(spark, int_files, tmp_path):
+def test_multiple_files(spark, int_files, tmp_path, monkeypatch):
     with_header, without_header = int_files
     # Use only the headerless file twice: every value counted twice.
+    # Blank lines and surrounding whitespace in the index are ignored.
     index = tmp_path / "index"
-    index.write_text(f"{without_header}\n{without_header}\n")
+    index.write_text(f"{without_header}\n\n  {without_header}  \n")
     out = MapReduceWithMultipleFiles(
         str(index), map_fcn, reduce_count_sum, 2, 3, spark=spark
     )
     by_key = {k: (n, s) for k, n, s in out}
     assert sum(n for n, _ in by_key.values()) == 2000
 
+    index.write_text("\n  \n")  # an index listing no file
+    assert MapReduceWithMultipleFiles(str(index), map_fcn, reduce_count_sum, 2, 3, spark=spark) == []
 
-def test_gzip_file_input(spark, tmp_path):
+    # More small files than tasks run at once: every line read once, in
+    # max(num_mappers, defaultParallelism) tasks, not one task per file.
+    n_files = spark.sparkContext.defaultParallelism + 10
+    paths = []
+    for i in range(n_files):
+        (tmp_path / f"s{i}.txt").write_text(f"{i}\n{i + 1000}\n")
+        paths.append(str(tmp_path / f"s{i}.txt"))
+    index.write_text("\n".join(paths) + "\n")
+    out = MapReduceWithMultipleFiles(str(index), map_fcn, reduce_count_sum, 2, 3, spark=spark)
+    assert sum(n for _, n, _ in out) == 2 * n_files
+    assert sum(s for _, _, s in out) == sum(i * i + (i + 1000) ** 2 for i in range(n_files))
+
+    import ray_mapreduce_spark.mapreduce as mr
+
+    monkeypatch.setattr(mr, "_run", lambda rdd, *args: rdd.getNumPartitions())
+    most = spark.sparkContext.defaultParallelism
+    for mappers in (2, most + 5):
+        assert MapReduceWithMultipleFiles(str(index), map_fcn, reduce_max, mappers, 3, spark=spark) == max(
+            mappers, most
+        )
+
+
+def test_directory_input(spark, tmp_path):
+    """A directory reads every file in it, but has no single first line
+    to skip: ``ignore_first_line`` on it raises before any Spark job."""
+    d = tmp_path / "parts"
+    d.mkdir()
+    (d / "a.txt").write_text("".join(f"{i}\n" for i in range(500)))
+    (d / "b.txt").write_text("".join(f"{i}\n" for i in range(500, 1000)))
+    out = MapReduceWithOneFileInput(str(d), map_fcn, reduce_max, 3, 4, spark=spark)
+    assert sorted(out) == EXPECTED_MAX
+
+    sc = spark.sparkContext
+    sc.setJobGroup("directory-with-header", "")
+    try:
+        with pytest.raises(ValueError, match="directory"):
+            MapReduceWithOneFileInput(
+                str(d), map_fcn, reduce_max, 3, 4, ignore_first_line=True, spark=spark
+            )
+        assert list(sc.statusTracker().getJobIdsForGroup("directory-with-header")) == []
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_gzip_file_input(spark, tmp_path, monkeypatch):
     """Compressed-file parity: the reference reads .gz transparently
     via smart_open (reference mapreduce.py:8, requirements.txt:2);
-    Spark's textFile does the same via Hadoop codecs."""
+    Spark's textFile does the same via Hadoop codecs. A .gz file is
+    one input split: the header skip still drops exactly one line, and
+    the input is spread to num_mappers partitions."""
     import gzip
 
     gz = tmp_path / "ints.txt.gz"
@@ -122,6 +171,23 @@ def test_gzip_file_input(spark, tmp_path):
         fh.write("".join(f"{i}\n" for i in range(1000)))
     out = MapReduceWithOneFileInput(str(gz), map_fcn, reduce_max, 2, 3, spark=spark)
     assert sorted(out) == EXPECTED_MAX
+    skipped = MapReduceWithOneFileInput(
+        str(gz), map_fcn, reduce_count_sum, 2, 3, ignore_first_line=True, spark=spark
+    )
+    assert sum(n for _, n, _ in skipped) == 999  # "0" was the header
+    assert sum(s for _, _, s in skipped) == sum(i * i for i in range(1000))
+
+    import ray_mapreduce_spark.mapreduce as mr
+
+    monkeypatch.setattr(mr, "_run", lambda rdd, *args: rdd.getNumPartitions())
+    index = tmp_path / "index"
+    index.write_text(f"{gz}\n")
+    for mappers in (1, 5):
+        for header in (False, True):
+            assert MapReduceWithOneFileInput(
+                str(gz), map_fcn, reduce_max, mappers, 3, ignore_first_line=header, spark=spark
+            ) == mappers
+        assert MapReduceWithMultipleFiles(str(index), map_fcn, reduce_max, mappers, 3, spark=spark) == mappers
 
 
 # --- month-count workload (FIXTURES.md Group B) ----------------------------
@@ -271,11 +337,20 @@ def test_combiner_sum(spark):
 
 def test_header_skip_multi_split_file(spark, tmp_path):
     """A file spanning many input splits must still lose EXACTLY its
-    first line: forces tiny splits via files.maxPartitionBytes and
-    pins a COUNT/SUM golden that catches any dropped or duplicated
-    row."""
+    first line, through the shim (num_mappers sets the split count)
+    and through ``read_text_lines`` (tiny splits forced via
+    files.maxPartitionBytes); COUNT/SUM goldens catch any dropped or
+    duplicated row."""
     big = tmp_path / "big.txt"
     big.write_text("header\n" + "".join(f"{i}\n" for i in range(200_000)))
+    assert spark.sparkContext.textFile(str(big), 20).getNumPartitions() >= 20
+    out = MapReduceWithOneFileInput(
+        str(big), lambda line: iter([(int(line) % 7, int(line))]), reduce_count_sum,
+        20, 4, ignore_first_line=True, spark=spark,
+    )
+    assert sorted(out) == sorted(
+        (k, len(range(k, 200_000, 7)), sum(range(k, 200_000, 7))) for k in range(7)
+    )
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(64 * 1024))  # ~20 splits
     try:
@@ -292,7 +367,7 @@ def test_header_skip_multi_split_file(spark, tmp_path):
 
 def test_manifest_path_with_comma(spark, tmp_path):
     """Paths containing commas must not be split (the reference opens
-    each listed path verbatim)."""
+    each listed path verbatim), through both entry points."""
     f = tmp_path / "weird,name.txt"
     f.write_text("".join(f"{i}\n" for i in range(100)))
     index = tmp_path / "index"
@@ -301,6 +376,43 @@ def test_manifest_path_with_comma(spark, tmp_path):
         str(index), map_fcn, reduce_count_sum, 2, 3, spark=spark
     )
     assert sum(n for _, n, _ in out) == 100
+    out = MapReduceWithOneFileInput(str(f), map_fcn, reduce_count_sum, 2, 3, spark=spark)
+    assert sum(n for _, n, _ in out) == 100
+
+
+@pytest.mark.parametrize("uri", [False, True])
+def test_glob_metacharacters_are_literal(spark, tmp_path, uri):
+    """``c[1].txt`` names only itself, never the decoy ``c1.txt`` that
+    the glob ``c[1].txt`` matches: through both entry points, with and
+    without the header skip, as a path and as a file:// URI. A glob
+    pattern is a literal name too: ``c*.txt`` does not exist, so it
+    raises rather than read ``c1.txt``."""
+    f = tmp_path / "c[1].txt"
+    f.write_text("".join(f"{i}\n" for i in range(100)))
+    (tmp_path / "c1.txt").write_text("".join(f"{i}\n" for i in range(100, 1000)))
+    path = f"file://{f}" if uri else str(f)
+    index = tmp_path / "index"
+    index.write_text(f"{path}\n")
+
+    def count_sum(out):
+        return sum(n for _, n, _ in out), sum(s for _, _, s in out)
+
+    squares = sum(i * i for i in range(100))
+    assert count_sum(MapReduceWithMultipleFiles(
+        str(index), map_fcn, reduce_count_sum, 2, 3, spark=spark)) == (100, squares)
+    assert count_sum(MapReduceWithOneFileInput(
+        path, map_fcn, reduce_count_sum, 2, 3, spark=spark)) == (100, squares)
+    assert count_sum(MapReduceWithOneFileInput(
+        path, map_fcn, reduce_count_sum, 2, 3, ignore_first_line=True, spark=spark)) == (99, squares)
+
+    pattern = path.replace("c[1].txt", "c*.txt")
+    index.write_text(f"{pattern}\n")
+    for header in (False, True):
+        with pytest.raises(Exception, match="Input path does not exist"):
+            MapReduceWithOneFileInput(pattern, map_fcn, reduce_count_sum, 2, 3,
+                                      ignore_first_line=header, spark=spark)
+    with pytest.raises(Exception, match="Input path does not exist"):
+        MapReduceWithMultipleFiles(str(index), map_fcn, reduce_count_sum, 2, 3, spark=spark)
 
 
 def test_uri_scheme_passthrough(spark, tmp_path):

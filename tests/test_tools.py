@@ -1,4 +1,5 @@
-"""Tests for tools/ — currently the audit-sweep cache key.
+"""Tests for tools/: the audit-sweep cache key, and EXPLAINS.md
+covering the whole query registry.
 
 The --changed-only cache must invalidate a query's key when ANY code
 that can alter its result changes: the builder's own plans module,
@@ -55,3 +56,17 @@ def test_own_module_edit_changes_only_its_dependents():
     assert base["window_running_and_lag"] != edited["window_running_and_lag"]
     assert base["dedup_exact"] == edited["dedup_exact"]
     assert base["q1_pricing_summary"] == edited["q1_pricing_summary"]
+
+
+def test_explains_covers_every_registered_query():
+    """tools/explain_audit.py writes one ``## <name>`` section per
+    registered query; a query added or renamed without regenerating
+    EXPLAINS.md leaves its plan unaudited."""
+    from ray_mapreduce_spark.plans import all_queries
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "EXPLAINS.md")) as fh:
+        sections = {ln[3:].strip() for ln in fh if ln.startswith("## ")}
+    registered = set(all_queries())
+    assert not registered - sections, f"no EXPLAINS.md section: {sorted(registered - sections)}"
+    assert not sections - registered, f"not registered: {sorted(sections - registered)}"

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Regenerate EXPLAINS.md: the formatted physical plan of every
-headline (bench=True) query plus the round's scale-sensitive
-additions, as reviewable evidence that the plan-shape claims in
-SCALING.md / docstrings hold (PushedFilters, ReadSchema pruning,
-broadcast placement, partial aggregation, TakeOrderedAndProject).
+registered query (``plans.all_queries()``), as reviewable evidence
+that the plan-shape claims in SCALING.md / docstrings hold
+(PushedFilters, ReadSchema pruning, broadcast placement, partial
+aggregation, TakeOrderedAndProject). ``tests/test_tools.py`` fails
+when a registered query has no section here.
 
 Run: python tools/explain_audit.py  (writes EXPLAINS.md at repo root)
 """
@@ -21,236 +22,6 @@ from ray_mapreduce_spark.plans import all_queries  # noqa: E402
 from ray_mapreduce_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-EXTRA = (
-    "sample_weighted_mixture",
-    "join_salted_skew",
-    "decontaminate_ngram_overlap",
-    "dedup_incremental_merge",
-    "similarity_topk_lsh",
-    "pipeline_training_batch",
-    "funnel_view_click_purchase",
-    "dedup_clusters_exact",
-    "multimodal_decode_features",
-    "events_retention_cohorts",
-    "events_zscore_outliers",
-    "sql_recursive_month_spine",
-    "variant_props_extract",
-    "cluster_kmeans_assign",
-    "text_bm25_topdocs",
-    "text_unigram_logprob",
-    "hybrid_neardup_scores",
-    "chunk_documents_overlap",
-    "sample_split_assign",
-    "text_unigram_incremental",
-    "text_bm25_incremental",
-    "events_sessionize_gap",
-    "dedup_repeated_spans",
-    "events_decayed_score",
-    "corpus_composition_report",
-    "decontaminate_embedding",
-    "similarity_topk_ivf_kmeans",
-    "dedup_containment_pairs",
-    "text_quality_classifier",
-    "text_bigram_pmi",
-    "dedup_semantic_kmeans",
-    "graph_pagerank_neardup",
-    "graph_triangle_count",
-    "quality_calibration_deciles",
-    "dedup_survivors_quality",
-    "events_key_skew_profile",
-    "events_winsorize_stats",
-    "text_bigram_logprob",
-    # late-r7 continuation additions
-    "events_anomaly_mad",
-    "text_token_entropy",
-    "sample_weighted_priority",
-    "dedup_jaccard_prefixfilter",
-    "similarity_pq_codes",
-    "similarity_pq_adc_topk",
-    "similarity_pq_rerank_topk",
-    "events_linreg_trend",
-    "corpus_source_kl",
-    "dedup_cross_source_matrix",
-    "q14_promo_revenue",
-    "q19_disjunctive_revenue",
-    "text_heavy_hitters_mg",
-    "corpus_snapshot_diff",
-    "text_vocab_coverage",
-    "similarity_tfidf_cosine_pairs",
-    "events_markov_transitions",
-    "orders_rfm_segments",
-    "embedding_covariance",
-    "dedup_exact_normalized",
-    "events_hourly_seasonality",
-    "embedding_power_iteration",
-    "events_funnel_time_to_convert",
-    "orders_repeat_purchase_rate",
-    "q7_nation_trade_matrix",
-    "dedup_rate_by_source",
-    "events_value_autocorr",
-    "orders_pareto_share",
-    "events_wau_rolling",
-    "events_top_paths",
-    "text_oov_rate",
-    "text_quality_length_corr",
-    # round 8 additions
-    "q4_order_priority",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q22_idle_capital",
-    "q2_best_supplier_per_part",
-    "orders_market_basket_pairs",
-    "events_user_overlap",
-    "embedding_dim_stats",
-    "text_truncation_loss",
-    "text_ngram_novelty",
-    "events_session_length_stats",
-    "sample_temperature_mixture",
-    "embedding_znorm_outliers",
-    "events_cusum_changepoint",
-    "orders_revenue_momentum",
-    "events_user_gini",
-    "orders_priority_drift",
-    "text_length_weighted_quantiles",
-    "text_distinctive_terms",
-    "orders_cohort_ltv",
-    "events_bot_score",
-    "q8_national_market_share",
-    # round 9 additions
-    "q16_part_supplier_variety",
-    "q21_late_sole_suppliers",
-    "dedup_minhash_estimate_pairs",
-    "decontaminate_substring_spans",
-    "sample_epoch_mixture_plan",
-    "q9_product_profit",
-    "q11_important_part_value",
-    "q12_ship_class_priority",
-    "q15_top_supplier",
-    "q20_dominant_suppliers",
-    "supplier_reliability_wilson",
-    "profile_documents_columns",
-    "graph_degree_assortativity",
-    "embedding_sq8_error",
-    "stream_dedup_ids",
-    "orders_open_backlog_daily",
-    "embedding_pca_histogram",
-    "events_ab_test_zscore",
-    "text_gopher_filters",
-    "lineitem_consistency_rules",
-    "embedding_truncation_fidelity",
-    "graph_clustering_coefficient",
-    "events_seasonal_forecast_smape",
-    "text_tokenizer_fertility",
-    "events_attribution_linear",
-    "dedup_edit_distance_pairs",
-    "events_ewma_volatility",
-    "sample_kcenter_coreset",
-    "graph_kcore_peel",
-    "similarity_rrf_fusion",
-    "privacy_k_anonymity",
-    "orders_benford_digits",
-    "dedup_split_leakage",
-    "embedding_label_agreement",
-    "events_psi_drift",
-    "orders_seasonal_index",
-    "text_compression_quality",
-    "embedding_diversity_gram",
-    "dedup_funnel_report",
-    "text_langid_confusion",
-    "events_next_event_accuracy",
-    "supplier_brand_hhi",
-    "events_dau_wau_stickiness",
-    # fourth r9 session
-    "events_tukey_fences",
-    "events_pettitt_changepoint",
-    "privacy_t_closeness",
-    "events_did_readout",
-    "dedup_bloom_prefilter",
-    "lineitem_discount_elasticity",
-    "sample_hard_negatives",
-    "text_code_detection",
-    "timeseries_acf_lags",
-    "timeseries_rolling_median",
-    "lineitem_returnflag_anova",
-    "orders_scd2_intervals",
-    "events_ks_two_sample",
-    "events_hill_tail_index",
-    "orders_reactivation",
-    "events_quantile_treatment_effect",
-    "text_quality_retention_curve",
-    "events_weekday_hour_heatmap",
-    "events_user_growth_curve",
-    "sample_recency_decay",
-    "events_window_funnel",
-    "text_naive_bayes_langid",
-    "events_slo_burn_rate",
-    "lineitem_duplicate_lines_screen",
-    "dedup_incremental_neardup",
-    "orders_user_similarity_jaccard",
-    "events_lifecycle_stages",
-    "sample_balanced_langs",
-    "pipeline_dataset_card",
-    "events_peak_concurrency",
-    "similarity_centroid_classifier",
-    "lineitem_supplier_switching",
-    "timeseries_metric_correlations",
-    # r10: the two-pass window swaps + the round's additions
-    "orders_abc_analysis",
-    "text_token_burstiness",
-    "corpus_lang_source_independence",
-    "events_interarrival_histogram",
-    "events_seasonal_decompose",
-    "sample_neyman_allocation",
-    # r11 additions
-    "events_power_analysis",
-    "lineitem_price_index",
-    "events_markov_entropy_rate",
-    "sample_importance_reweight",
-    "text_source_js_divergence",
-    # late-r11 additions
-    "events_mann_whitney",
-    "text_quality_length_spearman",
-    "privacy_dp_noise_calibration",
-    # r12 additions
-    "events_kaplan_meier",
-    "events_cmh_test",
-    "text_good_turing_coverage",
-    "events_ewma_residuals",
-    "events_winsorized_ab",
-    # r13 additions
-    "events_double_ewma_holt",
-    "events_benjamini_hochberg",
-    "text_keyword_rake",
-    "orders_twoway_fixed_effects",
-    "sample_pps_systematic",
-    # late-r13 additions
-    "orders_association_rules",
-    "events_cuped_adjusted_ab",
-    "lineitem_theil_index",
-    # r14 additions
-    "events_sprt_readout",
-    "text_burrows_delta",
-    # late-r14 additions
-    "text_yule_k",
-    "events_page_hinkley_drift",
-    "lineitem_newsvendor_quantile",
-    # r15 additions
-    "orders_queue_little_law",
-    "text_ttr_curve",
-    # r16: simhash core plan coverage (the C6-pattern scan's blind spot
-    # — it scans EXPLAINS.md, so uncovered plans are unscanned)
-    "dedup_simhash_pairs",
-    # late-r15 additions
-    "text_freq_spectrum",
-    "events_recurrence_cohorts",
-    "sample_horvitz_thompson",
-    "text_heaps_law_fit",
-    "orders_runs_test",
-    "orders_bootstrap_ci",
-    "embedding_intrinsic_dim",
-)
-
 
 def _parse_tree(plan: str):
     """Parse a formatted physical plan into (nodes, children):
@@ -382,14 +153,8 @@ def main() -> None:
     spark = get_spark("explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
-    unknown = [n for n in EXTRA if n not in specs]
-    if unknown:
-        # Mirror the registry's unknown-rotation-name raise (ADVICE r12):
-        # a misspelled or later-renamed EXTRA entry must fail loudly, not
-        # silently shrink the audit.
-        raise KeyError(f"EXTRA names not in all_queries(): {unknown}")
-    names = sorted(n for n, s in specs.items() if s.bench) + list(EXTRA)
-    out = ["# EXPLAINS — physical plans of the headline + scale-sensitive queries",
+    names = sorted(specs)
+    out = ["# EXPLAINS — physical plans of every registered query",
            "",
            f"Generated by `tools/explain_audit.py` at `{SF_DIR}` — {len(names)} plans.",
            "Things to check",
